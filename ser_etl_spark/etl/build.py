@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class UniquenessViolation(ValueError):
@@ -157,6 +158,11 @@ class BuildReport:
     tables: dict[str, int] = field(default_factory=dict)
     skipped: tuple[str, ...] = ()
     views: dict[str, str] = field(default_factory=dict)
+    #: table -> the written file schema as ``StructType.jsonValue()``,
+    #: without the ``partition_by`` column (Spark derives that one from
+    #: the directory names). Published in the manifest so readers
+    #: register views with no schema-inference job.
+    schemas: dict[str, dict] = field(default_factory=dict)
 
 
 #: Summary views recorded into the snapshot (reference A10:
@@ -209,7 +215,8 @@ def build_snapshot(
     Mirrors the reference's build loop (register -> CTAS -> indexes ->
     view, sync.py:69-121): per table, apply the sorted layout, enforce
     uniqueness, write parquet. Empty inputs are skipped (A18,
-    sync.py:44-46). Returns per-table row counts for the manifest (A13).
+    sync.py:44-46). Returns per-table row counts and file schemas for
+    the manifest (A13).
 
     ``carry`` (r8): per-table :class:`ArtifactCarry` — derived
     artifacts are hardlink-carried from the prior snapshot and upserted
@@ -221,6 +228,7 @@ def build_snapshot(
     layouts = layouts or {}
     carry = carry or {}
     counts: dict[str, int] = {}
+    schemas: dict[str, dict] = {}
     skipped: list[str] = []
     for name, df in dataframes.items():
         layout = layouts.get(name, TableLayout(unique_key="id"))
@@ -231,9 +239,14 @@ def build_snapshot(
             continue
         shaped = _apply_layout(df, layout)
         writer = shaped.write.mode("overwrite")
+        part = None
         if layout.partition_by and layout.partition_by in df.columns:
-            writer = writer.partitionBy(layout.partition_by)
+            part = layout.partition_by
+            writer = writer.partitionBy(part)
         writer.parquet(os.path.join(out_dir, name))
+        schemas[name] = StructType(
+            [f for f in shaped.schema.fields if f.name != part]
+        ).jsonValue()
         if layout.ann_index and "embedding" in df.columns:
             from ser_etl_spark.operators.similarity import (
                 _dim,
@@ -422,7 +435,12 @@ def build_snapshot(
         for vname, sql in view_defs.items()
         if _view_tables_present(sql, counts)
     }
-    return BuildReport(tables=counts, skipped=tuple(skipped), views=active_views)
+    return BuildReport(
+        tables=counts,
+        skipped=tuple(skipped),
+        views=active_views,
+        schemas=schemas,
+    )
 
 
 def write_bucketed_table(

@@ -39,12 +39,23 @@ def publish_snapshot(
     tables: dict[str, int],
     views: dict[str, str] | None = None,
     version: str | None = None,
+    schemas: dict[str, dict] | None = None,
 ) -> dict:
     """Move a built snapshot into the store and repoint the manifest.
 
     Returns the manifest written (reference A11-A13: upload + history copy
     + manifest; the version string uses the reference's
-    ``%Y%m%d_%H%M%S`` convention, s3_uploader.py:63-66).
+    ``%Y%m%d_%H%M%S`` convention, s3_uploader.py:63-66). Its keys:
+
+    - ``version``, ``timestamp``: the snapshot's version string and
+      publish time (UTC, ISO 8601);
+    - ``snapshot_dir``: the immutable ``history/snapshot_<version>`` dir;
+    - ``tables``: table -> row count;
+    - ``views``: view name -> SQL definition, registered by readers;
+    - ``schemas``: table -> file schema as ``StructType`` JSON (without
+      directory-partition columns), from ``BuildReport.schemas``.
+      Readers register views from it with no schema-inference job; a
+      table missing here (or a manifest without the key) is inferred.
     """
     version = version or dt.datetime.now(dt.timezone.utc).strftime("%Y%m%d_%H%M%S_%f")
     history_dir = os.path.join(store_root, "history")
@@ -60,6 +71,7 @@ def publish_snapshot(
         "snapshot_dir": snapshot_dir,
         "tables": tables,
         "views": views or {},
+        "schemas": schemas or {},
     }
     current_dir = os.path.join(store_root, "current")
     os.makedirs(current_dir, exist_ok=True)

@@ -64,7 +64,14 @@ class SyncOutcome:
 
 class SyncManager:
     """Drives one sync cycle; scheduling lives in
-    :mod:`ser_etl_spark.streaming.scheduler`."""
+    :mod:`ser_etl_spark.streaming.scheduler`.
+
+    Each successful cycle publishes a manifest (``SyncOutcome.manifest``)
+    with the snapshot's ``version``, ``snapshot_dir``, ``tables`` (row
+    counts), ``views`` (SQL definitions) and ``schemas`` (each table's
+    written file schema as ``StructType`` JSON, partition columns left
+    out), so the gateway swaps to the new snapshot without running a
+    schema-inference job per table."""
 
     def __init__(
         self,
@@ -205,6 +212,7 @@ class SyncManager:
                 self.store_root,
                 tables=report.tables,
                 views=report.views,
+                schemas=report.schemas,
             )
             cleanup_old_versions(self.store_root, self.config.keep_versions)
             return SyncOutcome(

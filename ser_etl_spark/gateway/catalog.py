@@ -6,7 +6,9 @@ from the most recently *published* snapshot, re-resolving when a TTL
 expires (120 s) or the manifest version changes. Instead of downloading an
 embedded DB file, we point temp views at the snapshot's Parquet directory —
 on a cluster that is an object-store prefix and executors read splits
-directly, so "refresh" is a metadata-only operation.
+directly, so "refresh" is a metadata-only operation: the manifest carries
+each table's file schema, so registering a new version lists files but
+runs no Spark job.
 """
 
 from __future__ import annotations
@@ -70,20 +72,13 @@ class SnapshotCatalog:
         except (OSError, json.JSONDecodeError):
             return {}
 
-    def _resolve(self) -> tuple[str, str | None]:
-        """Return (snapshot_dir, version) for the current snapshot."""
-        manifest = self.read_manifest()
-        if manifest.get("snapshot_dir"):
-            return manifest["snapshot_dir"], str(manifest.get("version"))
-        return self.root, None  # plain directory layout
-
-    def _register_manifest_views(self) -> list[str]:
+    def _register_manifest_views(self, manifest: dict) -> list[str]:
         """Register summary views recorded in the manifest (reference A10:
         the snapshot ships v_inventory_summary; here view *definitions*
         travel in the manifest and Catalyst computes them on demand).
         Returns the names actually created."""
         created: list[str] = []
-        for name, sql in self.read_manifest().get("views", {}).items():
+        for name, sql in manifest.get("views", {}).items():
             try:
                 self.spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
             except Exception:  # pragma: no cover - malformed view def
@@ -107,14 +102,21 @@ class SnapshotCatalog:
         """
         if not force and not self._stale():
             return self._resolved_dir  # type: ignore[return-value]
-        snapshot_dir, version = self._resolve()
+        # ONE manifest read per refresh: the version, directory, tables,
+        # views and schemas all come from the same publish, so a publish
+        # landing mid-refresh cannot pair one version's directory with
+        # another's tables.
+        manifest = self.read_manifest()
+        if manifest.get("snapshot_dir"):
+            snapshot_dir = manifest["snapshot_dir"]
+            version = str(manifest.get("version"))
+        else:
+            snapshot_dir, version = self.root, None  # plain directory layout
         if force or snapshot_dir != self._resolved_dir or version != self._version:
             # Explicit table list > manifest-declared tables > the default
             # fixture set: the manifest is the publish-time contract of
             # what a snapshot contains, so readers follow it.
-            tables = self.tables or tuple(
-                self.read_manifest().get("tables", {})
-            )
+            tables = self.tables or tuple(manifest.get("tables", {}))
             kwargs = {"tables": tables} if tables else {}
             for name in self._cached:  # drop pins of the outgoing version
                 try:
@@ -122,8 +124,13 @@ class SnapshotCatalog:
                 except Exception:  # pragma: no cover - already gone
                     pass
             self._cached = ()
-            registered = register_views(self.spark, snapshot_dir, **kwargs)
-            view_names = self._register_manifest_views()
+            registered = register_views(
+                self.spark,
+                snapshot_dir,
+                schemas=manifest.get("schemas"),
+                **kwargs,
+            )
+            view_names = self._register_manifest_views(manifest)
             self._registered = tuple(registered) + tuple(view_names)
             if self.cache_tables:
                 # Pin exactly the views THIS catalog just registered —

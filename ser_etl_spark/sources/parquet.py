@@ -11,9 +11,11 @@ a local directory, and every executor reads its own split.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: The test fixture tables (TESTDATA.md). The engine itself is
 #: schema-agnostic — like the reference, whatever the source provides
@@ -130,11 +132,22 @@ def _session_stopped(s: SparkSession) -> bool:
         return True
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def load_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    schema: StructType | None = None,
+) -> DataFrame:
     """Read one snapshot table as a DataFrame (lazy; columnar scan).
 
     Nanosecond timestamp columns are normalized to Spark's native
     microsecond TimestampType (truncation, matching DuckDB's cast).
+
+    ``schema`` is the table's file schema as published in a snapshot
+    manifest (``BuildReport.schemas``). When given, the read uses it and
+    skips both Parquet's schema-inference job and the footer probe: a
+    snapshot written by Spark holds no nanosecond columns. Partition
+    columns are left out of it and still come from the directory names.
     """
     from ser_etl_spark.artifacts import source_fingerprint
 
@@ -150,10 +163,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # one-shot tmp-dir reads under the size bound
             _DF_CACHE[key] = _DF_CACHE.pop(key)
             return hit[1]
-    ns_cols = _ns_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    if schema is not None:
+        ns_cols = []
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        ns_cols = _ns_timestamp_cols(path)
+        if ns_cols:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
     for c in ns_cols:
         # TIMESTAMP_NTZ, built arithmetically from the raw int64 so the
         # value is identical under any session timezone (parquet NTZ ms
@@ -197,18 +214,30 @@ def spread_small_input(df: DataFrame, min_partitions: int = 16) -> DataFrame:
 
 
 def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
+    spark: SparkSession,
+    sf_dir: str,
+    tables: tuple[str, ...] = TABLES,
+    schemas: Mapping[str, dict] | None = None,
 ) -> dict[str, DataFrame]:
     """Register each snapshot table as a temp view (reference op A6).
 
     Mirrors ``conn.register(name, df)`` at
     ``/root/reference/etl-service/src/sync.py:81`` — exposing DataFrames to
     the SQL surface. Missing tables are skipped so partial snapshots load.
+    ``schemas`` is a manifest's ``schemas`` entry (table -> ``StructType``
+    JSON); tables it covers are read without schema inference.
     """
+    schemas = schemas or {}
     out: dict[str, DataFrame] = {}
     for name in tables:
         try:
-            df = load_table(spark, sf_dir, name)
+            recorded = schemas.get(name)
+            df = load_table(
+                spark,
+                sf_dir,
+                name,
+                StructType.fromJson(recorded) if recorded else None,
+            )
         except Exception:
             continue
         df.createOrReplaceTempView(name)

@@ -392,6 +392,198 @@ class TestSyncCycle:
         assert out2.manifest["version"] != out.manifest["version"]
 
 
+class TestManifestSchemas:
+    """Metadata-only refresh: ``build_snapshot`` records each written
+    table's file schema, ``publish_snapshot`` puts it in the manifest and
+    the catalog registers views from it instead of running Parquet schema
+    inference. One snapshot covers every layout kind the build writes."""
+
+    LAYOUTS = {
+        # range-partitioned on the unique key
+        "orders": TableLayout(unique_key="o_orderkey", sort_col="o_orderdate"),
+        # sort column only
+        "lineitem": TableLayout(unique_key=None, sort_col="l_shipdate"),
+        # partitioned on an int and on a date column
+        "nation_by_region": TableLayout(
+            unique_key="n_nationkey", partition_by="n_regionkey"
+        ),
+        "events_by_day": TableLayout(
+            unique_key="event_id", sort_col="ts", partition_by="day"
+        ),
+        "embeddings": TableLayout(unique_key="vec_id"),
+        # "nation" and "nested" take the default layout: "nested" has an
+        # ``id`` (range), "nation" has none (coalesce)
+    }
+
+    @pytest.fixture(scope="class")
+    def published(self, spark, sf_small, tmp_path_factory):
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
+        src = ParquetSource(sf_small)
+        nested = spark.createDataFrame(
+            [
+                (1, [{"a": 1, "b": "x"}], {"p": 1.5, "q": [1, 2]}, {"k": 1}),
+                (2, [], {"p": -2.0, "q": []}, {}),
+                (3, [{"a": 3, "b": "z"}, {"a": 4, "b": "w"}], None, None),
+            ],
+            T.StructType(
+                [
+                    T.StructField("id", T.LongType(), False),
+                    T.StructField(
+                        "items",
+                        T.ArrayType(
+                            T.StructType(
+                                [
+                                    T.StructField("a", T.IntegerType(), False),
+                                    T.StructField("b", T.StringType()),
+                                ]
+                            ),
+                            containsNull=False,
+                        ),
+                        False,
+                    ),
+                    T.StructField(
+                        "rec",
+                        T.StructType(
+                            [
+                                T.StructField("p", T.DoubleType(), False),
+                                T.StructField("q", T.ArrayType(T.IntegerType())),
+                            ]
+                        ),
+                    ),
+                    T.StructField(
+                        "tags",
+                        T.MapType(
+                            T.StringType(), T.LongType(), valueContainsNull=False
+                        ),
+                    ),
+                ]
+            ),
+        )
+        frames = {
+            "orders": extract_table(spark, src, "orders"),
+            "lineitem": extract_table(spark, src, "lineitem"),
+            "nation": extract_table(spark, src, "nation"),
+            "nation_by_region": extract_table(spark, src, "nation"),
+            "events_by_day": extract_table(spark, src, "events").withColumn(
+                "day", F.to_date("ts")
+            ),
+            "embeddings": extract_table(spark, src, "embeddings"),
+            "nested": nested,
+        }
+        root = tmp_path_factory.mktemp("manifest_schemas")
+        build = str(root / "build")
+        report = build_snapshot(frames, build, layouts=self.LAYOUTS, views={})
+        store = str(root / "store")
+        manifest = publish_snapshot(
+            build,
+            store,
+            tables=report.tables,
+            views={"v_nested": "SELECT id FROM nested"},
+            schemas=report.schemas,
+            version="20240101_000000",
+        )
+        return store, manifest
+
+    @staticmethod
+    def _rows(df) -> list[str]:
+        return sorted(repr(r) for r in df.collect())
+
+    def test_registered_views_equal_inferred_reads(self, spark, published):
+        store, manifest = published
+        assert set(manifest["schemas"]) == set(manifest["tables"])
+        assert len(manifest["tables"]) == 7
+        # partition columns are left to Spark's directory discovery
+        for table, layout in self.LAYOUTS.items():
+            names = {
+                f["name"] for f in manifest["schemas"][table]["fields"]
+            }
+            assert layout.partition_by not in names
+        # the recorded schema keeps the frame's non-null fields; the read
+        # below must still match inference, which makes every field nullable
+        assert manifest["schemas"]["nested"]["fields"][0]["nullable"] is False
+        cat = SnapshotCatalog(spark, store)
+        cat.refresh(force=True)
+        for table in manifest["tables"]:
+            view = spark.table(table)
+            inferred = spark.read.parquet(
+                os.path.join(manifest["snapshot_dir"], table)
+            )
+            assert view.schema == inferred.schema, table
+            assert self._rows(view) == self._rows(inferred), table
+        assert spark.table("v_nested").count() == 3
+
+    @staticmethod
+    def _republish(manifest, tmp_path, store, version, schemas=True):
+        import shutil
+
+        build = str(tmp_path / f"build_{version}")
+        shutil.copytree(manifest["snapshot_dir"], build)
+        return publish_snapshot(
+            build,
+            store,
+            tables=manifest["tables"],
+            views=manifest["views"],
+            schemas=manifest["schemas"] if schemas else None,
+            version=version,
+        )
+
+    def test_refresh_onto_new_snapshot_runs_no_job(
+        self, spark, published, tmp_path
+    ):
+        _, manifest = published
+        store = str(tmp_path / "store")
+        self._republish(manifest, tmp_path, store, "20240102_000000")
+        cat = SnapshotCatalog(spark, store, ttl_s=0)
+        cat.refresh()
+        self._republish(manifest, tmp_path, store, "20240103_000000")
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        try:
+            sc.setJobGroup("metadata-only-refresh", "refresh")
+            cat.refresh()
+            # control: a plain read of one table runs the inference job
+            # the refresh above avoided, so the probe can see one
+            sc.setJobGroup("inferred-read", "read")
+            spark.read.parquet(
+                os.path.join(cat.status()["snapshot_dir"], "orders")
+            )
+        finally:
+            sc.setJobGroup("", "")
+        assert cat.status()["snapshot_version"] == "20240103_000000"
+        assert set(cat.status()["tables"]) == set(manifest["tables"]) | {
+            "v_nested"
+        }
+        assert list(tracker.getJobIdsForGroup("metadata-only-refresh")) == []
+        assert list(tracker.getJobIdsForGroup("inferred-read"))
+        assert spark.table("orders").count() == manifest["tables"]["orders"]
+
+    def test_manifest_without_schemas_registers_every_table(
+        self, spark, published, tmp_path
+    ):
+        _, manifest = published
+        store = str(tmp_path / "store")
+        legacy = self._republish(
+            manifest, tmp_path, store, "20240104_000000", schemas=False
+        )
+        assert legacy["schemas"] == {}
+        # a manifest published before the key existed has no entry at all
+        path = os.path.join(store, "current", "manifest.json")
+        with open(path) as f:
+            raw = json.load(f)
+        del raw["schemas"]
+        with open(path, "w") as f:
+            json.dump(raw, f)
+        cat = SnapshotCatalog(spark, store)
+        cat.refresh(force=True)
+        assert set(cat.status()["tables"]) == set(manifest["tables"]) | {
+            "v_nested"
+        }
+        for table, rows in manifest["tables"].items():
+            assert spark.table(table).count() == rows, table
+
+
 class TestIncrementalMerge:
     """A17 upgrade path: apply the changed slice instead of full refresh."""
 

@@ -145,6 +145,45 @@ class TestCatalogRefresh:
         # second call within TTL is a no-op returning the cached dir
         assert cat.refresh() == sf_small
 
+    def test_refresh_reads_one_manifest(self, spark, tmp_path):
+        """A publish landing mid-refresh must not pair one version's
+        directory with the next version's tables or views: the refresh
+        takes all of them from a single manifest read."""
+        from ser_etl_spark.etl.build import build_snapshot
+        from ser_etl_spark.etl.publish import publish_snapshot
+
+        store = str(tmp_path / "store")
+
+        def publish(table, view, version):
+            out = str(tmp_path / f"b_{version}")
+            df = spark.range(3).withColumnRenamed("id", "k")
+            r = build_snapshot({table: df}, out, views={})
+            publish_snapshot(
+                out, store, tables=r.tables, schemas=r.schemas,
+                views={view: f"SELECT k FROM {table}"}, version=version,
+            )
+
+        publish("one_tbl", "one_view", "20240101_000000")
+        cat = SnapshotCatalog(spark, store)
+        reads = []
+        original = cat.read_manifest
+
+        def read_then_publish():
+            manifest = original()
+            reads.append(manifest["version"])
+            if len(reads) == 1:
+                publish("two_tbl", "two_view", "20240102_000000")
+            return manifest
+
+        cat.read_manifest = read_then_publish
+        cat.refresh(force=True)
+        status = cat.status()
+        assert status["snapshot_version"] == "20240101_000000"
+        assert status["snapshot_dir"].endswith("snapshot_20240101_000000")
+        assert status["tables"] == ["one_tbl", "one_view"]
+        assert spark.table("one_view").count() == 3
+        assert reads == ["20240101_000000"]
+
 
 class TestRateLimiter:
     """C12 — reference defaults: 50 req/min per client
